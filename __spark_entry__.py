@@ -26,12 +26,13 @@ families should be validated there too, not only at sf0.01.
 from __future__ import annotations
 
 import math as _math
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nnanalytics_spark.core import postops
+from nnanalytics_spark.core import postops, scratch
 from nnanalytics_spark.inode import bins
 from nnanalytics_spark.inode.engine import INodeEngine
 from nnanalytics_spark.pipeline import dedup, similarity, text
@@ -60,10 +61,9 @@ def _ship_package(spark: SparkSession) -> None:
         return
     import os
     import shutil
-    import tempfile
 
     base = os.path.dirname(os.path.abspath(__file__))
-    stem = os.path.join(tempfile.mkdtemp(prefix="nna_pkg_"), "nnanalytics_spark")
+    stem = os.path.join(scratch.mkdir("nna_pkg_"), "nnanalytics_spark")
     archive = shutil.make_archive(stem, "zip", root_dir=base, base_dir="nnanalytics_spark")
     sc.addPyFile(archive)
     _PKG_SHIPPED.add(app_id)
@@ -110,6 +110,114 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception:
         pass
     return _with_ts_cols(spark.read.parquet(f"{sf_dir}/events.parquet"))
+
+
+def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events.parquet as a file stream with _events' ts_ms/ts_us columns.
+    FileStreamSource wants a directory; the glob filter keeps the sf
+    dir's other tables out of the listing."""
+    schema = _events(spark, sf_dir).drop("ts_ms", "ts_us").schema
+    return _with_ts_cols(
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+
+
+_CHILD_SESSIONS: dict[tuple, SparkSession] = {}
+_CHILD_LOCK = threading.Lock()
+# Every stateful stream operator starts one state store (and, for
+# applyInPandasWithState, one Arrow Python worker) per shuffle partition,
+# fixed at stream start: a vanilla 200-partition session pays ~25 s of
+# worker fan-out for a 150-key state.
+_STREAM_CONF = {"spark.sql.shuffle.partitions": "8"}
+_UTC_CONF = {"spark.sql.session.timeZone": "UTC"}
+
+
+def _child_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A session on `spark`'s context with `conf` set in its OWN SQL conf,
+    so a builder never touches the session it was handed (the threaded
+    web server shares one). A child starts from the context's builder
+    conf, not the parent's runtime sets. One child per (application,
+    conf), reused: each session that runs a stream keeps a listener on
+    the context's bus for life."""
+    key = (spark.sparkContext.applicationId, tuple(sorted(conf.items())))
+    with _CHILD_LOCK:
+        if key not in _CHILD_SESSIONS:
+            child = spark.newSession()
+            for k, v in conf.items():
+                child.conf.set(k, v)
+            _CHILD_SESSIONS[key] = child
+        return _CHILD_SESSIONS[key]
+
+
+def _run_stream(spark, build, *, segments=(), mode="append", foreach=None):
+    """The streaming-parity harness: run one stream to completion and
+    return (sink, stopped query).
+
+    `segments` (batch DataFrames) land one parquet file each under the
+    scratch root with mtimes pinned 10 s apart: FileStreamSource orders
+    files by mtime, so with one file per trigger they arrive as
+    micro-batches 0, 1, ... however long each write took.
+    `build(child, src)` returns the streaming DataFrame; `child` is the
+    _STREAM_CONF child session and `src` the segment stream (None
+    without segments). The sink is a parquet directory read back on the
+    handed session, or None when `foreach` consumes each micro-batch."""
+    import os
+    import time
+
+    child = _child_session(spark, _STREAM_CONF)
+    base = scratch.mkdir("nna_stream_")
+    src = None
+    if segments:
+        mtime = time.time() - 3600
+        for i, seg in enumerate(segments):
+            path = f"{base}/in/seg{i}"
+            seg.coalesce(1).write.parquet(path)
+            for name in os.listdir(path):
+                os.utime(os.path.join(path, name), (mtime + 10 * i,) * 2)
+        src = (
+            child.readStream.schema(segments[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{base}/in/*")
+        )
+    writer = build(child, src).writeStream.outputMode(mode)
+    if foreach is None:
+        writer = writer.format("parquet").option("path", f"{base}/data")
+    else:
+        writer = writer.foreachBatch(foreach)
+    q = writer.option("checkpointLocation", f"{base}/ckpt").start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return (spark.read.parquet(f"{base}/data") if foreach is None else None), q
+
+
+def _sentinel_flush(spark, ev, op):
+    """Shared body of the buffer-until-watermark parities (locf, ewma,
+    holt): stream `ev` (user_id, event_id, ts_ms, value) through `op` as
+    one segment followed by two far-future sentinel rows (user_id =
+    event_id = -1, -2 at max + 10 and + 11 days). The late-event
+    watermark trails eviction by one batch, so it takes both sentinels
+    to flush every real key. Returns the sunk real-key rows, or None for
+    an empty event log. Sentinels are JVM literals: createDataFrame(list)
+    routes through a Python RDD and paid ~5 s of worker spin-up per
+    write."""
+    max_ts = ev.agg(F.max("ts_ms")).collect()[0][0]
+    if max_ts is None:
+        return None
+    sentinels = [
+        spark.range(1).select(
+            F.lit(uid).cast("long").alias("user_id"),
+            F.lit(uid).cast("long").alias("event_id"),
+            F.lit(max_ts + days * 86_400_000).cast("long").alias("ts_ms"),
+            F.lit(0.0).alias("value"),
+        )
+        for uid, days in ((-1, 10), (-2, 11))
+    ]
+    sunk, _ = _run_stream(spark, lambda _s, src: op(src), segments=[ev, *sentinels])
+    return sunk.filter(F.col("user_id") >= 0)
 
 
 def _dsum(col: str, alias: str) -> F.Column:
@@ -1100,14 +1208,12 @@ _IVF_INDEX: dict[str | tuple[str, str], str] = {}
 
 def _ivf_index(spark, sf):
     """ivf_build once per sf dir (similarity.py:ivf_build): centroids +
-    cell-partitioned assignment parquet in a temp dir, reused by every
-    search in the process — the build/search split VERDICT r3 #4 asked
-    for, instead of re-running k-means per query."""
+    cell-partitioned assignment parquet under the scratch root, reused by
+    every search in the process — the build/search split VERDICT r3 #4
+    asked for, instead of re-running k-means per query."""
     if sf not in _IVF_INDEX:
-        import tempfile
-
         emb = _t(spark, sf, "embeddings").filter(F.col("vec_id") != 0)
-        path = tempfile.mkdtemp(prefix="nna_ivf_")
+        path = scratch.mkdir("nna_ivf_")
         _IVF_INDEX[sf] = similarity.ivf_build(emb, path, nlist=16)
     return _IVF_INDEX[sf]
 
@@ -1126,9 +1232,7 @@ def q_ann_ivf_topk(spark, sf):
         # nothing left to index once the query vector is held out
         return spark.createDataFrame([], "vec_id long, cos_sim double")
     if ("pinned", sf) not in _IVF_INDEX:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="nna_ivfp_")
+        path = scratch.mkdir("nna_ivfp_")
         _IVF_INDEX[("pinned", sf)] = similarity.ivf_build_pinned(
             emb.filter(F.col("vec_id") != 0), path, centroid_ids=list(range(1, 9))
         )
@@ -1608,8 +1712,7 @@ def q_inode_columns(spark, sf):
     pinned so date rendering is environment-independent."""
     from nnanalytics_spark.inode import columns as reg
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = _inodes(spark, sf).filter(F.col("type") == "file")
+    df = _inodes(_child_session(spark, _UTC_CONF), sf).filter(F.col("type") == "file")
     names = [
         "id",
         "depth",
@@ -1630,8 +1733,7 @@ def q_dump_inode(spark, sf):
     predicate pushes into the scan."""
     from nnanalytics_spark.inode import columns as reg
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = _inodes(spark, sf).filter(F.col("name") == "part_42")
+    df = _inodes(_child_session(spark, _UTC_CONF), sf).filter(F.col("name") == "part_42")
     names = ["id", "path", "name", "user", "group", "fileSize", "fileReplica",
              "depth", "permission", "numReplicas", "diskspaceConsumed",
              "memoryConsumed", "modDate", "accessDate"]
@@ -2137,12 +2239,10 @@ def q_oiv_xml_roundtrip(spark, sf):
     by the root-down level walk. The fixture namespace is closed-form
     (sources/oivgen.py) so the oracle reproduces every row from range().
     """
-    import tempfile
-
     from nnanalytics_spark.sources import loader, oivgen
 
     _ship_package(spark)
-    tmp = tempfile.mkdtemp(prefix="oiv_xml_")
+    tmp = scratch.mkdir("oiv_xml_")
     oivgen.write_oiv_xml(tmp, n_dirs=4, files_per_dir=25)
     ino = loader.read_fsimage_xml(spark, tmp)
     return ino.filter(F.col("type") == "file").select(
@@ -2160,12 +2260,10 @@ def q_fsimage_proto_roundtrip(spark, sf):
     Same closed-form namespace as oiv_xml_roundtrip, written by an
     independent encoder, so the same range() oracle predicts every row
     — and batch=16 forces genuinely parallel multi-range decode."""
-    import tempfile
-
     from nnanalytics_spark.sources import fsimage
 
     _ship_package(spark)
-    tmp = tempfile.mkdtemp(prefix="fsimage_bin_")
+    tmp = scratch.mkdir("fsimage_bin_")
     img = fsimage.write_fsimage_binary(tmp, n_dirs=4, files_per_dir=25)
     ino = fsimage.read_fsimage_binary(spark, img, batch=16)
     return ino.filter(F.col("type") == "file").select(
@@ -2184,12 +2282,10 @@ def q_fsimage_gzip_roundtrip(spark, sf):
     decode — so the range() oracle still predicts every row. Different
     namespace size than fsimage_proto_roundtrip so the two rows can't
     shadow each other."""
-    import tempfile
-
     from nnanalytics_spark.sources import fsimage
 
     _ship_package(spark)
-    tmp = tempfile.mkdtemp(prefix="fsimage_gz_")
+    tmp = scratch.mkdir("fsimage_gz_")
     img = fsimage.write_fsimage_binary(tmp, n_dirs=5, files_per_dir=17, codec="gzip")
     ino = fsimage.read_fsimage_binary(spark, img, batch=16)
     return ino.filter(F.col("type") == "file").select(
@@ -2264,45 +2360,21 @@ def q_sessionization_parity(spark, sf):
     stateful streaming operator AND the batch lag+cumsum twin to each
     other. The foreachBatch collect is bounded by |distinct users|, not
     events (update-mode emissions, latest epoch wins)."""
+    from nnanalytics_spark.core.smalldf import local_df
     from nnanalytics_spark.streaming.stateful import streaming_sessionization
 
-    _ship_package(spark)  # stateful fold is unpickled in Python workers
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    # FileStreamSource wants a directory; glob-filter the sf dir down to
-    # the events table so the other tables' files are never listed in.
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
+    emitted: list[tuple[int, int, int]] = []
+    _run_stream(
+        spark,
+        lambda s, _: streaming_sessionization(
+            _event_stream(s, sf).select("user_id", "ts_ms")
+        ),
+        mode="update",
+        foreach=lambda batch, epoch: emitted.extend(
+            (epoch, int(r["user_id"]), int(r["n_sessions"])) for r in batch.collect()
+        ),
     )
-    ev = _with_ts_cols(stream).select("user_id", "ts_ms")
-    out = streaming_sessionization(ev)
-
-    emissions: list[tuple[int, int, int]] = []
-
-    def sink(batch_df, epoch_id):
-        for r in batch_df.collect():
-            emissions.append((epoch_id, int(r["user_id"]), int(r["n_sessions"])))
-
-    # The stateful operator spawns one state-store instance (and an Arrow
-    # Python worker) per shuffle partition, captured at stream start — a
-    # vanilla 200-partition session pays ~25 s of worker fan-out for a
-    # 150-key state. Pin a sane width for the stream, restore after.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = out.writeStream.outputMode("update").foreachBatch(sink).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    final: dict[int, int] = {}
-    for _epoch, user, n in sorted(emissions):
-        final[user] = n
-    from nnanalytics_spark.core.smalldf import local_df
-
+    final = {user: n for _epoch, user, n in sorted(emitted)}
     return local_df(spark, sorted(final.items()), "user_id long, n_sessions long")
 
 
@@ -2324,9 +2396,8 @@ def q_watermark_window_parity(spark, sf):
     Emitted set = windows with end <= max(ts)-H, counts over ALL events —
     exactly the oracle SQL. At 100 TB the foreachBatch collect becomes a
     parquet sink; state is bounded by |open windows|, not the corpus."""
-    import os
-    import tempfile
-    import time
+    from nnanalytics_spark.core.smalldf import local_df
+    from nnanalytics_spark.streaming.refresh import windowed_event_counts
 
     h_ms = 601_000  # not a multiple of the 300 s window so window ends
     win_ms = 300_000  # never tie the watermark (hash-stable boundary)
@@ -2334,74 +2405,38 @@ def q_watermark_window_parity(spark, sf):
     max_ts = ev.agg(F.max("ts_ms")).collect()[0][0]
     if max_ts is None:
         # empty event log: no windows can close — typed empty parity
-        from nnanalytics_spark.core.smalldf import local_df
-
         return local_df(spark, [], "win long, event_type string, cnt long")
-    seg_dir = tempfile.mkdtemp(prefix="nna_wm_seg_")
-    segments = [
-        ev,
-        ev.filter(F.col("ts_ms") > max_ts - win_ms),
-        ev.filter((F.col("ts_ms") < max_ts - 3 * h_ms) & (F.col("event_id") % 97 == 0)),
+    rows = []
+    _, q = _run_stream(
+        spark,
+        lambda _s, src: windowed_event_counts(
+            src.withColumn("ts", F.timestamp_millis(F.col("ts_ms"))),
+            window="300 seconds",
+            horizon=f"{h_ms} milliseconds",
+            with_value=False,
+        ),
+        segments=[
+            ev,
+            ev.filter(F.col("ts_ms") > max_ts - win_ms),
+            ev.filter((F.col("ts_ms") < max_ts - 3 * h_ms) & (F.col("event_id") % 97 == 0)),
+        ],
+        foreach=lambda batch, _epoch: rows.extend(batch.collect()),
+    )
+    q_watermark_window_parity.last_dropped = sum(
+        op.get("numRowsDroppedByWatermark", 0)
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    )
+    out = [
+        (int(r["window"].start.timestamp() * 1000) // win_ms, r["event_type"], int(r["cnt"]))
+        for r in rows
     ]
-    base_mtime = time.time() - 3600
-    for i, seg in enumerate(segments):
-        path = f"{seg_dir}/seg{i}"
-        seg.coalesce(1).write.parquet(path)
-        # FileStreamSource orders batches by mtime — pin it explicitly so
-        # segment arrival order never depends on write latency.
-        for name in os.listdir(path):
-            os.utime(os.path.join(path, name), (base_mtime + 10 * i,) * 2)
-
-    stream = (
-        spark.readStream.schema("event_id long, ts_ms long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{seg_dir}/*")
-    )
-    from nnanalytics_spark.streaming.refresh import windowed_event_counts
-
-    out = windowed_event_counts(
-        stream.withColumn("ts", F.timestamp_millis(F.col("ts_ms"))),
-        window="300 seconds",
-        horizon=f"{h_ms} milliseconds",
-        with_value=False,
-    )
-    rows: list[tuple[int, str, int]] = []
-    dropped = [0]
-
-    def sink(batch_df, _epoch):
-        for r in batch_df.collect():
-            rows.append(
-                (
-                    int(r["window"].start.timestamp() * 1000) // win_ms,
-                    r["event_type"],
-                    int(r["cnt"]),
-                )
-            )
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = out.writeStream.outputMode("append").foreachBatch(sink).start()
-        try:
-            q.processAllAvailable()
-            dropped[0] = sum(
-                op.get("numRowsDroppedByWatermark", 0)
-                for p in q.recentProgress
-                for op in p["stateOperators"]
-            )
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    q_watermark_window_parity.last_dropped = dropped[0]
-    from nnanalytics_spark.core.smalldf import local_df
-
     # None-safe sort key: a NULL event_type must not TypeError against
     # str (the collected order is cosmetic — the driver hash is
     # order-insensitive)
     return local_df(
         spark,
-        sorted(rows, key=lambda r: (r[0], r[1] is not None, r[1] or "", r[2])),
+        sorted(out, key=lambda r: (r[0], r[1] is not None, r[1] or "", r[2])),
         "win long, event_type string, cnt long",
     )
 
@@ -2416,33 +2451,16 @@ def q_stream_static_join_parity(spark, sf):
     broadcasts per micro-batch exactly as it would on a cluster.
     value_cents uses floor(value*100) so the double sum is
     integer-exact on both engines."""
-    import tempfile
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    dim = _t(spark, sf, "customer").select("c_custkey", "c_nationkey")
-    enriched = (
-        _with_ts_cols(stream)
-        .join(F.broadcast(dim), F.col("user_id") == F.col("c_custkey"))
-        .select("event_id", "user_id", "c_nationkey", "event_type", "value")
-    )
-    out_dir = tempfile.mkdtemp(prefix="nna_stream_join_")
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", f"{out_dir}/data")
-        .option("checkpointLocation", f"{out_dir}/ckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sunk = spark.read.parquet(f"{out_dir}/data")
+    def build(s, _):
+        dim = _t(s, sf, "customer").select("c_custkey", "c_nationkey")
+        return (
+            _event_stream(s, sf)
+            .join(F.broadcast(dim), F.col("user_id") == F.col("c_custkey"))
+            .select("event_id", "user_id", "c_nationkey", "event_type", "value")
+        )
+
+    sunk, _ = _run_stream(spark, build)
     return sunk.groupBy("c_nationkey", "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("user_id").alias("n_users"),
@@ -2460,10 +2478,6 @@ def q_stream_locf_parity(spark, sf):
     fills. Two far-future sentinel segments advance the lagging
     watermark so every key flushes; the sink is then hash-checked
     against the batch LOCF oracle."""
-    import os
-    import tempfile
-    import time
-
     from nnanalytics_spark.streaming.stateful import streaming_forward_fill
 
     # every row crosses Python state and the sink — a quarter of the
@@ -2479,63 +2493,12 @@ def q_stream_locf_parity(spark, sf):
             F.when(F.col("event_id") % 4 == 0, F.col("value")).alias("value"),
         )
     )
-    max_ts = ev.agg(F.max("ts_ms")).collect()[0][0]
-    if max_ts is None:
-        # empty event log: no segments, no stream — typed empty parity
+    sunk = _sentinel_flush(spark, ev, streaming_forward_fill)
+    if sunk is None:  # empty event log: typed empty parity
         return spark.createDataFrame(
             [], "event_id long, user_id long, value double, value_filled double"
         )
-    seg_dir = tempfile.mkdtemp(prefix="nna_locf_seg_")
-    schema = "user_id long, event_id long, ts_ms long, value double"
-
-    def _sentinel(uid: int, ts: int) -> DataFrame:
-        # JVM-side literal row: createDataFrame(list) routes through a
-        # Python RDD and pays ~5 s of worker spin-up PER WRITE here
-        # (measured — it was 2/3 of this query's wall time)
-        return spark.range(1).select(
-            F.lit(uid).cast("long").alias("user_id"),
-            F.lit(uid).cast("long").alias("event_id"),
-            F.lit(ts).cast("long").alias("ts_ms"),
-            F.lit(None).cast("double").alias("value"),
-        )
-
-    sent1 = _sentinel(-1, max_ts + 10 * 86_400_000)
-    sent2 = _sentinel(-2, max_ts + 11 * 86_400_000)
-    base_mtime = time.time() - 3600
-    for i, seg in enumerate((ev, sent1, sent2)):
-        path = f"{seg_dir}/seg{i}"
-        seg.coalesce(1).write.parquet(path)
-        for name in os.listdir(path):
-            os.utime(os.path.join(path, name), (base_mtime + 10 * i,) * 2)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{seg_dir}/*")
-    )
-    out_dir = tempfile.mkdtemp(prefix="nna_locf_sink_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            streaming_forward_fill(stream)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{out_dir}/data")
-            .option("checkpointLocation", f"{out_dir}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    sunk = spark.read.parquet(f"{out_dir}/data")
-    return (
-        sunk.filter(F.col("user_id") >= 0)
-        .select("event_id", "user_id", "value", "value_filled")
-        .orderBy("event_id")
-    )
+    return sunk.select("event_id", "user_id", "value", "value_filled").orderBy("event_id")
 
 
 # EWMA smoothing constant shared by q_stream_ewma_parity and its
@@ -2557,10 +2520,6 @@ def q_stream_ewma_parity(spark, sf):
     Same segmented-parquet + far-future-sentinel harness as
     stream_locf_parity; a quarter of the users exercises the operator at
     a quarter of the harness cost."""
-    import os
-    import tempfile
-    import time
-
     from nnanalytics_spark.streaming.stateful import streaming_ewma
 
     ev = (
@@ -2568,70 +2527,23 @@ def q_stream_ewma_parity(spark, sf):
         .filter(F.col("user_id") % 4 == 1)
         .select("user_id", "event_id", "ts_ms", "value")
     )
-    max_ts = ev.agg(F.max("ts_ms")).collect()[0][0]
-    if max_ts is None:
-        # empty event log: no segments, no stream — typed empty parity
+    sunk = _sentinel_flush(spark, ev, lambda src: streaming_ewma(src, alpha=_EWMA_ALPHA))
+    if sunk is None:  # empty event log: typed empty parity
         return spark.createDataFrame(
             [], "user_id long, event_id long, value double, ewma double, is_anomaly int"
         )
-    seg_dir = tempfile.mkdtemp(prefix="nna_ewma_seg_")
-    schema = "user_id long, event_id long, ts_ms long, value double"
-
-    def _sentinel(uid: int, ts: int) -> DataFrame:
-        return spark.range(1).select(
-            F.lit(uid).cast("long").alias("user_id"),
-            F.lit(uid).cast("long").alias("event_id"),
-            F.lit(ts).cast("long").alias("ts_ms"),
-            F.lit(0.0).cast("double").alias("value"),
-        )
-
-    sent1 = _sentinel(-1, max_ts + 10 * 86_400_000)
-    sent2 = _sentinel(-2, max_ts + 11 * 86_400_000)
-    base_mtime = time.time() - 3600
-    for i, seg in enumerate((ev, sent1, sent2)):
-        path = f"{seg_dir}/seg{i}"
-        seg.coalesce(1).write.parquet(path)
-        for name in os.listdir(path):
-            os.utime(os.path.join(path, name), (base_mtime + 10 * i,) * 2)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{seg_dir}/*")
-    )
-    out_dir = tempfile.mkdtemp(prefix="nna_ewma_sink_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            streaming_ewma(stream, alpha=_EWMA_ALPHA)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{out_dir}/data")
-            .option("checkpointLocation", f"{out_dir}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    sunk = spark.read.parquet(f"{out_dir}/data")
     # prev_s is NaN on each key's first row (vs the oracle's NULL) —
     # fold it into the anomaly flag instead of emitting it raw
-    return (
-        sunk.filter(F.col("user_id") >= 0)
-        .select(
-            "user_id",
-            "event_id",
-            "value",
-            F.round("ewma", 6).alias("ewma"),
-            F.when(
-                F.abs(F.col("value") - F.col("prev_s")) > 50, 1
-            ).otherwise(0).cast("int").alias("is_anomaly"),
-        )
-        .orderBy("event_id")
-    )
+    return sunk.select(
+        "user_id",
+        "event_id",
+        "value",
+        F.round("ewma", 6).alias("ewma"),
+        F.when(F.abs(F.col("value") - F.col("prev_s")) > 50, 1)
+        .otherwise(0)
+        .cast("int")
+        .alias("is_anomaly"),
+    ).orderBy("event_id")
 
 
 def q_stream_holt_parity(spark, sf):
@@ -2644,10 +2556,6 @@ def q_stream_holt_parity(spark, sf):
     against a recursive-CTE oracle replaying the identical
     literal-by-literal chain. Same segmented-parquet +
     far-future-sentinel harness as stream_ewma_parity; %4==2 users."""
-    import os
-    import tempfile
-    import time
-
     from nnanalytics_spark.streaming.stateful import streaming_holt
 
     ev = (
@@ -2655,66 +2563,20 @@ def q_stream_holt_parity(spark, sf):
         .filter(F.col("user_id") % 4 == 2)
         .select("user_id", "event_id", "ts_ms", "value")
     )
-    max_ts = ev.agg(F.max("ts_ms")).collect()[0][0]
-    if max_ts is None:
-        # empty event log: no segments, no stream — typed empty parity
+    sunk = _sentinel_flush(
+        spark, ev, lambda src: streaming_holt(src, alpha=_HOLT_ALPHA, beta=_HOLT_BETA)
+    )
+    if sunk is None:  # empty event log: typed empty parity
         return spark.createDataFrame(
             [], "user_id long, event_id long, value double, level double, trend double"
         )
-    seg_dir = tempfile.mkdtemp(prefix="nna_holt_seg_")
-    schema = "user_id long, event_id long, ts_ms long, value double"
-
-    def _sentinel(uid: int, ts: int) -> DataFrame:
-        return spark.range(1).select(
-            F.lit(uid).cast("long").alias("user_id"),
-            F.lit(uid).cast("long").alias("event_id"),
-            F.lit(ts).cast("long").alias("ts_ms"),
-            F.lit(0.0).cast("double").alias("value"),
-        )
-
-    sent1 = _sentinel(-1, max_ts + 10 * 86_400_000)
-    sent2 = _sentinel(-2, max_ts + 11 * 86_400_000)
-    base_mtime = time.time() - 3600
-    for i, seg in enumerate((ev, sent1, sent2)):
-        path = f"{seg_dir}/seg{i}"
-        seg.coalesce(1).write.parquet(path)
-        for name in os.listdir(path):
-            os.utime(os.path.join(path, name), (base_mtime + 10 * i,) * 2)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{seg_dir}/*")
-    )
-    out_dir = tempfile.mkdtemp(prefix="nna_holt_sink_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            streaming_holt(stream, alpha=_HOLT_ALPHA, beta=_HOLT_BETA)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{out_dir}/data")
-            .option("checkpointLocation", f"{out_dir}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    sunk = spark.read.parquet(f"{out_dir}/data")
-    return (
-        sunk.filter(F.col("user_id") >= 0)
-        .select(
-            "user_id",
-            "event_id",
-            "value",
-            F.round("level", 6).alias("level"),
-            F.round("trend", 6).alias("trend"),
-        )
-        .orderBy("event_id")
-    )
+    return sunk.select(
+        "user_id",
+        "event_id",
+        "value",
+        F.round("level", 6).alias("level"),
+        F.round("trend", 6).alias("trend"),
+    ).orderBy("event_id")
 
 
 def q_sweep_roundtrip(spark, sf):
@@ -2723,11 +2585,9 @@ def q_sweep_roundtrip(spark, sf):
     parquet; reading quotaReport back must reproduce the in-memory
     computation — the oracle is the SAME SQL as quota_report, so this row
     hash-checks the written artifact, not just the plan."""
-    import tempfile
-
     from nnanalytics_spark.inode import suggestions
 
-    out_dir = tempfile.mkdtemp(prefix="nna_sweep_")
+    out_dir = scratch.mkdir("nna_sweep_")
     suggestions.run_sweep(_inodes(spark, sf), NOW_MS, output_dir=out_dir)
     return spark.read.parquet(f"{out_dir}/quotaReport")
 
@@ -2741,11 +2601,9 @@ def q_history_roundtrip(spark, sf):
     pins the append-only persistence AND the now-relative arithmetic.
     (fileSize = floor(p_retailprice) keeps every file in the tiny/small
     classes; emptyFiles pins the zero class.)"""
-    import tempfile
-
     from nnanalytics_spark.inode import suggestions
 
-    out_dir = tempfile.mkdtemp(prefix="nna_hist_")
+    out_dir = scratch.mkdir("nna_hist_")
     ino = _inodes(spark, sf)
     suggestions.run_sweep(ino, NOW_MS, output_dir=out_dir)
     suggestions.run_sweep(ino, NOW_MS + 7 * 86_400_000, output_dir=out_dir)
@@ -2774,8 +2632,6 @@ def q_changelog_upsert(spark, sf):
     post-merge namespace closed-form from part, so the hash pins the
     anti-join+union MERGE semantics. Segments are conflict-free across
     ids, so the result is identical however micro-batches split."""
-    import tempfile
-
     from pyspark.sql import types as T
 
     from nnanalytics_spark.streaming.refresh import ChangeLogTailer
@@ -2805,7 +2661,7 @@ def q_changelog_upsert(spark, sf):
         .withColumn("user", F.lit("fresh"))
         .withColumn("op", F.lit("add"))
     )
-    log_dir = tempfile.mkdtemp(prefix="nna_changelog_")
+    log_dir = scratch.mkdir("nna_changelog_")
     seg1.write.mode("append").parquet(log_dir)
     seg2.write.mode("append").parquet(log_dir)
 
@@ -2834,11 +2690,9 @@ def q_save_namespace_roundtrip(spark, sf):
     row-group skipping — then read it back and aggregate per type. The
     oracle reproduces both partitions closed-form, so the hash checks the
     written artifact survives the layout round-trip losslessly."""
-    import tempfile
-
     from nnanalytics_spark.sources import layout
 
-    out_dir = tempfile.mkdtemp(prefix="nna_namespace_")
+    out_dir = scratch.mkdir("nna_namespace_")
     ino = _inodes(spark, sf)
     layout.write_inode_table(ino, out_dir, path_partitions=8)
     # explicit read schema: an empty-write sink has no files to infer from
@@ -2919,14 +2773,12 @@ def q_bucketed_join(spark, sf):
     join key, then joined via the catalog — the exchange that dominates a
     fact-fact join disappears (tests/test_sources.py asserts the
     shuffle-free plan; this row hash-verifies the VALUES the bucketed
-    path produces). External-table paths keep data in tempdirs.
+    path produces). External-table paths keep data under the scratch root.
 
     The bucketed tables are written ONCE per (session, sf) and reused on
     later calls — the operator under measurement is the co-located JOIN,
     not the fixture writer (a real deployment buckets at ingest and
     amortizes the write over every subsequent join)."""
-    import tempfile
-
     from nnanalytics_spark.sources import layout
 
     key = (spark.sparkContext.applicationId, sf)
@@ -2935,7 +2787,7 @@ def q_bucketed_join(spark, sf):
         li_name, o_name = f"bench_li_bkt_{tag}", f"bench_o_bkt_{tag}"
         li = _t(spark, sf, "lineitem").select("l_orderkey", "l_extendedprice")
         o = _t(spark, sf, "orders").select("o_orderkey", "o_orderpriority")
-        d = tempfile.mkdtemp(prefix="nna_bucketed_")
+        d = scratch.mkdir("nna_bucketed_")
         layout.write_bucketed(li, li_name, "l_orderkey", 8,
                               sort_col="l_orderkey", path=f"{d}/li")
         layout.write_bucketed(o, o_name, "o_orderkey", 8,
@@ -3060,11 +2912,9 @@ def q_range_shard_layout(spark, sf):
     reduction checks pairwise range disjointness. The oracle states the
     invariants closed-form (8 shards, all rows, all keys, sorted, no
     overlap)."""
-    import tempfile
-
     from nnanalytics_spark.sources import layout
 
-    out_dir = tempfile.mkdtemp(prefix="nna_shards_")
+    out_dir = scratch.mkdir("nna_shards_")
     ev = _events(spark, sf).select("event_id", "ts_us", "event_type", "value")
     layout.range_shard_write(ev, out_dir, "ts_us", num_shards=8)
     return layout.verify_shard_layout(spark, out_dir, "ts_us")
@@ -3076,11 +2926,9 @@ def q_compaction_roundtrip(spark, sf):
     WITHOUT a shuffle, then re-aggregated — the hash proves the compacted
     table is row-identical to the source and the file counts landed
     exactly on target."""
-    import tempfile
-
     from nnanalytics_spark.sources import layout
 
-    base = tempfile.mkdtemp(prefix="nna_compact_")
+    base = scratch.mkdir("nna_compact_")
     small, out = f"{base}/small", f"{base}/compact"
     _events(spark, sf).select("event_id", "user_id", "value").repartition(
         64
@@ -3220,11 +3068,9 @@ def q_zone_map_prune(spark, sf):
     The oracle computes the same range closed-form over the raw table —
     the hash proves pruned-scan == full-scan — and the pruned flag pins
     that the zone map actually skipped files."""
-    import tempfile
-
     from nnanalytics_spark.sources import layout
 
-    out_dir = tempfile.mkdtemp(prefix="nna_zonemap_")
+    out_dir = scratch.mkdir("nna_zonemap_")
     ev = _events(spark, sf).select("event_id", "ts_us", "value")
     mn, mx = ev.agg(F.min("ts_us"), F.max("ts_us")).collect()[0]
     if mn is None:
@@ -3256,9 +3102,7 @@ def q_schema_evolution(spark, sf):
     with v2; a mergeSchema read unions the footers so v1 rows surface
     event_type as NULL — tagged '(legacy)' — and the aggregate hashes the
     merged table against the closed-form oracle."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="nna_evolve_")
+    base = scratch.mkdir("nna_evolve_")
     ev = _events(spark, sf).select("event_id", "event_type", "value")
     ev.filter(F.col("event_id") % 2 == 0).select("event_id", "value").write.parquet(
         f"{base}/v1"
@@ -3308,14 +3152,12 @@ def q_incremental_rollup(spark, sf):
     partials into a parquet state table — O(|batch| + |keys|) per
     refresh, NEVER a history rescan. After all three merges the state
     must hash-equal the closed-form full-log rollup."""
-    import tempfile
-
     from nnanalytics_spark.core.aggregates import (
         merge_partial_aggregates,
         partial_aggregate,
     )
 
-    base = tempfile.mkdtemp(prefix="nna_rollup_")
+    base = scratch.mkdir("nna_rollup_")
     ev = _events(spark, sf).select("event_id", "event_type", "value")
     state = partial_aggregate(ev.filter(F.col("event_id") % 3 == 0), "event_type", "value")
     for i in (1, 2):
@@ -3359,15 +3201,13 @@ def q_hll_rollup(spark, sf):
     the EXACT distinct — emitted alongside — within the lg_k=14 error
     bound. The oracle pins the exact count and the bound flag; the
     estimate itself is sketch-internal and never hashed."""
-    import tempfile
-
     from nnanalytics_spark.core.aggregates import (
         hll_estimate,
         hll_partial,
         merge_hll_partials,
     )
 
-    base = tempfile.mkdtemp(prefix="nna_hll_")
+    base = scratch.mkdir("nna_hll_")
     ev = _events(spark, sf).select("event_id", "event_type", "user_id")
     state = hll_partial(ev.filter(F.col("event_id") % 3 == 0), "event_type", "user_id")
     for i in (1, 2):
@@ -3609,43 +3449,17 @@ def q_stream_dedup_parity(spark, sf):
     proves the deduplicated stream on disk equals the batch-distinct
     oracle. State is keyed by (id, time) and evicted by the watermark:
     bounded by the lateness horizon, not the stream length."""
-    import tempfile
-
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    def _src():
-        return (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf)
-        )
-
-    doubled = _with_ts_cols(_src()).unionByName(_with_ts_cols(_src()))
-    deduped = (
-        doubled.withColumn("wm", F.timestamp_millis(F.col("ts_ms")))
-        .withWatermark("wm", "1 hour")
-        .dropDuplicates(["event_id", "wm"])
-        .select("event_id", "user_id", "event_type", "value")
+    sunk, _ = _run_stream(
+        spark,
+        lambda s, _: (
+            _event_stream(s, sf)
+            .unionByName(_event_stream(s, sf))
+            .withColumn("wm", F.timestamp_millis(F.col("ts_ms")))
+            .withWatermark("wm", "1 hour")
+            .dropDuplicates(["event_id", "wm"])
+            .select("event_id", "user_id", "event_type", "value")
+        ),
     )
-    out_dir = tempfile.mkdtemp(prefix="nna_stream_dedup_")
-    # dropDuplicates keeps one state store per shuffle partition — same
-    # fan-out economics as sessionization_parity; pin for the stream
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{out_dir}/data")
-            .option("checkpointLocation", f"{out_dir}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    sunk = spark.read.parquet(f"{out_dir}/data")
     return (
         sunk.groupBy("event_type")
         .agg(
@@ -4277,12 +4091,10 @@ def q_snapshot_diff(spark, sf):
     classification; the fixture sizes make all four classes non-empty
     (d=0 files keep identical mtimes -> unchanged; other overlaps shift
     mtime -> modified)."""
-    import tempfile
-
     from nnanalytics_spark.sources import fsimage, layout
 
     _ship_package(spark)
-    tmp = tempfile.mkdtemp(prefix="snapdiff_")
+    tmp = scratch.mkdir("snapdiff_")
     old_img = fsimage.write_fsimage_binary(tmp + "/old", n_dirs=4, files_per_dir=25)
     new_img = fsimage.write_fsimage_binary(tmp + "/new", n_dirs=5, files_per_dir=17)
     old = fsimage.read_fsimage_binary(spark, old_img, batch=32).filter(
@@ -4432,15 +4244,13 @@ def q_quantile_rollup(spark, sf):
     the state as exact bucket upper edges. After all three merges the
     state's quantiles must hash-equal the closed-form full-log
     histogram quantiles the oracle computes."""
-    import tempfile
-
     from nnanalytics_spark.core.aggregates import (
         bucket_quantiles,
         merge_quantile_partials,
         quantile_partial,
     )
 
-    base = tempfile.mkdtemp(prefix="nna_qstate_")
+    base = scratch.mkdir("nna_qstate_")
     ev = _events(spark, sf).select("event_id", "event_type", "value")
     state = quantile_partial(
         ev.filter(F.col("event_id") % 3 == 0), "event_type", "value", width=5.0
@@ -4467,48 +4277,30 @@ def q_stream_rollup_parity(spark, sf):
     rollup. Merge order across micro-batches is irrelevant by
     construction (counts + DECIMAL sums), which is exactly the property
     that makes the pattern safe under redelivery."""
-    import tempfile
-
     from nnanalytics_spark.core.aggregates import (
         merge_partial_aggregates,
         partial_aggregate,
     )
 
-    base = tempfile.mkdtemp(prefix="nna_stream_rollup_")
-    ev = _events(spark, sf).select("event_id", "event_type", "value")
-    for i in range(3):
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{base}/in/batch{i}")
-    src_schema = spark.read.parquet(f"{base}/in/batch0").schema
-    stream = (
-        spark.readStream.schema(src_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/in/batch*")
-    )
-    state = {"path": None, "version": 0}
+    state_dir = scratch.mkdir("nna_stream_rollup_")
+    versions: list[str] = []
 
     def fold(batch_df, _batch_id):
         agg = partial_aggregate(batch_df, "event_type", "value")
-        if state["path"] is not None:
-            stored = batch_df.sparkSession.read.parquet(state["path"])
+        if versions:
+            stored = batch_df.sparkSession.read.parquet(versions[-1])
             agg = merge_partial_aggregates(stored, agg, "event_type")
-        state["version"] += 1
-        new_path = f"{base}/state_v{state['version']}"
-        agg.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
+        versions.append(f"{state_dir}/state_v{len(versions) + 1}")
+        agg.write.parquet(versions[-1])
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .start()
+    ev = _events(spark, sf).select("event_id", "event_type", "value")
+    _run_stream(
+        spark,
+        lambda _s, src: src,
+        segments=[ev.filter(F.col("event_id") % 3 == i) for i in range(3)],
+        foreach=fold,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    final = spark.read.parquet(state["path"])
-    return final.select(
+    return spark.read.parquet(versions[-1]).select(
         "event_type", "cnt", F.col("sum_value").cast("double").alias("sum_value")
     )
 
@@ -4525,66 +4317,35 @@ def q_stream_stream_join_parity(spark, sf):
     aggregates the SINK, so the hash covers the streamed join output on
     disk against the closed-form batch join the oracle replays with
     exact millisecond arithmetic."""
-    import tempfile
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
+    def build(s, _):
+        clicks = (
+            _event_stream(s, sf)
+            .filter(F.col("event_type") == "click")
+            .select(
+                F.col("user_id").alias("c_user"),
+                F.timestamp_millis(F.col("ts_ms")).alias("cts"),
+            )
+            .withWatermark("cts", "1 hour")
+        )
+        purchases = (
+            _event_stream(s, sf)
+            .filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("event_id").alias("p_id"),
+                F.col("user_id").alias("p_user"),
+                F.col("value").alias("p_value"),
+                F.timestamp_millis(F.col("ts_ms")).alias("pts"),
+            )
+            .withWatermark("pts", "1 hour")
+        )
+        return purchases.join(
+            clicks,
+            F.expr("p_user = c_user AND cts >= pts - INTERVAL 1 HOUR AND cts <= pts"),
+            "inner",
+        ).select("p_id", "p_user", "p_value")
 
-    def _src():
-        return (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf)
-        )
-
-    clicks = (
-        _with_ts_cols(_src())
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.timestamp_millis(F.col("ts_ms")).alias("cts"),
-        )
-        .withWatermark("cts", "1 hour")
-    )
-    purchases = (
-        _with_ts_cols(_src())
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("value").alias("p_value"),
-            F.timestamp_millis(F.col("ts_ms")).alias("pts"),
-        )
-        .withWatermark("pts", "1 hour")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "p_user = c_user AND cts >= pts - INTERVAL 1 HOUR AND cts <= pts"
-        ),
-        "inner",
-    ).select("p_id", "p_user", "p_value")
-    out_dir = tempfile.mkdtemp(prefix="nna_ss_join_")
-    # stream-stream joins keep one state store PER SIDE per shuffle
-    # partition, captured at stream start — the sessionization_parity
-    # pinning, doubled in weight here (measured 6.1 s -> the pin is the
-    # difference between 64 and 16 state stores + Arrow workers)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{out_dir}/data")
-            .option("checkpointLocation", f"{out_dir}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    sunk = spark.read.parquet(f"{out_dir}/data")
+    sunk, _ = _run_stream(spark, build)
     return sunk.agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.countDistinct("p_id").alias("n_purchases"),
@@ -4798,11 +4559,9 @@ def q_partition_prune(spark, sf):
     scan resolved (every surviving file must live under
     event_type=click/), so a planner that stopped pruning reds the row;
     the aggregate must match the closed-form answer on the raw table."""
-    import tempfile
-
     from nnanalytics_spark.sources import layout
 
-    base = tempfile.mkdtemp(prefix="nna_part_")
+    base = scratch.mkdir("nna_part_")
     ev = _events(spark, sf).select("event_id", "event_type", "value")
     layout.write_partitioned(ev, base, "event_type")
     # explicit read schema: an empty-write sink has no files to infer from
@@ -6272,14 +6031,12 @@ def q_format_roundtrip(spark, sf):
     the parquet-derived oracle numbers exactly, pinning the codec
     round-trip (ORC preserves longs/doubles natively; JSON re-parses
     them from text)."""
-    import tempfile
-
     e = _events(spark, sf).select(
         "event_id",
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    base = tempfile.mkdtemp(prefix="nna_fmt_")
+    base = scratch.mkdir("nna_fmt_")
     e.write.orc(f"{base}/orc")
     e.write.json(f"{base}/json")
     orc = spark.read.orc(f"{base}/orc").withColumn("fmt", F.lit("orc"))
@@ -6403,14 +6160,12 @@ def q_backfill_plan(spark, sf):
     broadcast-anti-joins them against the expected partition calendar.
     The missing set must be exactly the odd-numbered months — the
     oracle derives it from the same pinned rule."""
-    import tempfile
-
     from nnanalytics_spark.sources import layout
 
     o = _t(spark, sf, "orders").withColumn(
         "month", F.date_format("o_orderdate", "yyyy-MM")
     )
-    sink = tempfile.mkdtemp(prefix="nna_backfill_")
+    sink = scratch.mkdir("nna_backfill_")
     done = o.filter(F.month("o_orderdate") % 2 == 0)
     layout.write_partitioned(done.select("o_orderkey", "month"), sink, "month")
     expected = o.select("month").distinct()

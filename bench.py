@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -404,6 +405,50 @@ def _release_cached(spark) -> None:
         pass
 
 
+_SNAPSHOT = re.compile(r"BENCH_FULL_r(\d+)\.json")
+
+
+def _vs_prev_round(here: str, sf_val, timings: dict[str, float]) -> dict | None:
+    """Round-over-round integrity (VERDICT r8 #6): compare THIS run's
+    common-subset total against the PREVIOUS ROUND's committed snapshot
+    (BENCH_FULL_r{N}.json — written once per round at close, never
+    overwritten by intra-round passes), so a pass-vs-pass "0.93x" can
+    never paper over a round-over-round 1.2x. Only meaningful at the
+    same sf; cross-host drift still applies and is the reader's job to
+    adjudicate — but the DENOMINATOR is always the prior round, by
+    construction. Other BENCH_FULL_r* names (same-day reruns such as
+    BENCH_FULL_r9_sameday.json) are not round snapshots and are skipped.
+    Any failure here returns None: the comparison must never sink a run
+    whose queries have all been timed."""
+    try:
+        snaps = sorted(
+            (int(m.group(1)), os.path.join(here, f))
+            for f in os.listdir(here)
+            if (m := _SNAPSHOT.fullmatch(f))
+        )
+        if not snaps:
+            return None
+        prev_round, prev_path = snaps[-1]
+        with open(prev_path) as fh:
+            prev = json.load(fh)
+        if prev.get("sf") != sf_val:
+            return None
+        common = sorted(set(timings) & set(prev.get("queries", {})))
+        cur_c = sum(timings[q] for q in common)
+        prev_c = sum(prev["queries"][q] for q in common)
+        if prev_c <= 0 or not common:
+            return None
+        return {
+            "prev_round": prev_round,
+            "n_common": len(common),
+            "cur_common_sec": round(cur_c, 3),
+            "prev_common_sec": round(prev_c, 3),
+            "ratio": round(cur_c / prev_c, 3),
+        }
+    except Exception:
+        return None  # a malformed snapshot must not sink the bench run
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -451,43 +496,8 @@ def main() -> None:
         "cpu_end": probe_post["cpu"],
     }
 
-    # Round-over-round integrity (VERDICT r8 #6): compare THIS run's
-    # common-subset total against the PREVIOUS ROUND's committed
-    # snapshot (BENCH_FULL_r{N}.json — written once per round at close,
-    # never overwritten by intra-round passes), so a pass-vs-pass
-    # "0.93x" can never paper over a round-over-round 1.2x. Only
-    # meaningful at the same sf; cross-host drift still applies and is
-    # the reader's job to adjudicate — but the DENOMINATOR is now
-    # always the prior round, by construction.
     here = os.path.dirname(os.path.abspath(__file__))
-    vs_prev = None
-    snaps = sorted(
-        (
-            int(f.rsplit("_r", 1)[1].split(".")[0]),
-            os.path.join(here, f),
-        )
-        for f in os.listdir(here)
-        if f.startswith("BENCH_FULL_r") and f.endswith(".json")
-    )
-    if snaps:
-        prev_round, prev_path = snaps[-1]
-        try:
-            with open(prev_path) as fh:
-                prev = json.load(fh)
-            if prev.get("sf") == sf_val:
-                common = sorted(set(timings) & set(prev.get("queries", {})))
-                cur_c = sum(timings[q] for q in common)
-                prev_c = sum(prev["queries"][q] for q in common)
-                if prev_c > 0 and common:
-                    vs_prev = {
-                        "prev_round": prev_round,
-                        "n_common": len(common),
-                        "cur_common_sec": round(cur_c, 3),
-                        "prev_common_sec": round(prev_c, 3),
-                        "ratio": round(cur_c / prev_c, 3),
-                    }
-        except Exception:
-            pass  # a malformed snapshot must not sink the bench run
+    vs_prev = _vs_prev_round(here, sf_val, timings)
 
     # Full per-query detail goes to a file: the driver that records the
     # printed line keeps only a ~2000-char tail of stdout, and BENCH_r04

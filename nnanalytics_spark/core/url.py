@@ -161,6 +161,8 @@ def run_url(engine, url: str, now_ms: int | None = None) -> DataFrame:
             return engine.filter_sum(query)
         return engine.dump_paths(query)
     if endpoint == "histogram" or endpoint == "histogram3":
+        # /histogram3's K sums + finds merged per key
+        # (NamenodeAnalyticsMethods.java:1890-1944) is ONE groupBy().agg()
         return engine.histogram(query)
     if endpoint == "histogram2":
         return engine.histogram2(query)

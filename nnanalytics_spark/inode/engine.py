@@ -169,14 +169,6 @@ class INodeEngine:
         k2 = self._group_key(df, query.type2, query).alias(query.type2)
         return df.groupBy(k1, k2).agg(*self._sum_exprs(df, query))
 
-    def histogram3(self, query: Query) -> DataFrame:
-        """/histogram3: K sums + finds over one grouping, merged per key
-        (NamenodeAnalyticsMethods.java:1890-1944). The reference loops K
-        full scans then merges; here it is ONE groupBy().agg(k1..kK) —
-        value column order = sums order then finds order, preserving the
-        reference's merge contract."""
-        return self.histogram(query)
-
     def divide(self, q1: Query, q2: Query) -> DataFrame:
         """/divide: sum(query1) / sum(query2)
         (NamenodeAnalyticsMethods.java:1310-1393)."""

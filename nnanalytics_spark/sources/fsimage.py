@@ -56,6 +56,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nnanalytics_spark.core import scratch
 from nnanalytics_spark.sources import oivgen
 from nnanalytics_spark.sources.loader import resolve_paths
 
@@ -251,7 +252,9 @@ def _inflate_sections(
             f"(supported: {sorted(_CODECS)})"
         )
     kind, arg = recipe
-    fd, sidecar = tempfile.mkstemp(prefix="fsimage_inflated_", dir=scratch_dir)
+    fd, sidecar = tempfile.mkstemp(
+        prefix="fsimage_inflated_", dir=scratch_dir or scratch.root()
+    )
     sections: dict[str, tuple[int, int]] = {}
     chunk = 1 << 20
     with open(path, "rb") as src, os.fdopen(fd, "wb") as dst:
@@ -505,8 +508,9 @@ def read_fsimage_binary(
     """Parse a binary protobuf fsimage into the stored inode schema (the
     same 24 columns read_fsimage_xml emits). See module docstring for the
     scan/decode split and the compressed-section sidecar (``scratch_dir``
-    must be executor-visible on a real cluster; defaults to the system
-    temp dir, which is correct for local mode)."""
+    must be executor-visible on a real cluster; defaults to the process
+    scratch root (core/scratch.py, removed at interpreter exit), which is
+    correct for local mode)."""
     import pandas as pd
 
     summary = parse_summary(path)

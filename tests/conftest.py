@@ -33,14 +33,28 @@ SMOKE_FILES = frozenset(
 # the stricter dtype-class discipline stays enforced in the full suite.
 SMOKE_DESELECT_TESTS = frozenset({"test_dtype_parity"})
 
+# Top-level temp names the engine used to leak; every one now lives under
+# the single scratch root (nnanalytics_spark/core/scratch.py).
+SCRATCH_PREFIXES = (
+    "nna_", "oiv_xml_", "fsimage_bin_", "fsimage_gz_", "snapdiff_", "fsimage_inflated_",
+)
+
 
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_SMOKE") != "1":
         return
+    # Rename-rot guard, here rather than in a test because any test would
+    # itself be deselected by the smoke filter: when the whole suite is
+    # collected, every smoke file must contribute at least one item.
+    tests_dir = Path(__file__).resolve().parent
+    if any(tests_dir.is_relative_to(Path(a).resolve()) for a in config.args):
+        missing = SMOKE_FILES - {item.path.name for item in items}
+        if missing:
+            raise pytest.UsageError(f"smoke-lane files collected nothing: {sorted(missing)}")
     keep, dropped = [], []
     for item in items:
         in_smoke = (
-            Path(str(item.fspath)).name in SMOKE_FILES
+            item.path.name in SMOKE_FILES
             and getattr(item, "originalname", item.name) not in SMOKE_DESELECT_TESTS
         )
         (keep if in_smoke else dropped).append(item)

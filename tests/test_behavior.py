@@ -7,7 +7,6 @@ from __future__ import annotations
 import hashlib
 import math
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -134,11 +133,11 @@ class TestParagraphDedup:
 
 
 class TestShardLayout:
-    def test_valid_layout_passes(self, spark):
+    def test_valid_layout_passes(self, spark, tmp_path):
         df = spark.range(0, 1000).select(
             F.col("id").alias("k"), (F.col("id") * 2).alias("v")
         )
-        d = tempfile.mkdtemp(prefix="nna_t_shard_")
+        d = str(tmp_path)
         layout.range_shard_write(df, d, "k", num_shards=4)
         row = layout.verify_shard_layout(spark, d, "k").collect()[0]
         assert row["n_shards"] == 4
@@ -147,27 +146,27 @@ class TestShardLayout:
         assert bool(row["all_sorted"]) is True
         assert row["overlap_pairs"] == 0
 
-    def test_hash_partitioned_layout_is_flagged(self, spark):
+    def test_hash_partitioned_layout_is_flagged(self, spark, tmp_path):
         # hash partitioning interleaves key ranges → overlaps must show up
         df = spark.range(0, 1000).select(F.col("id").alias("k"))
-        d = tempfile.mkdtemp(prefix="nna_t_badshard_")
+        d = str(tmp_path)
         df.repartition(4, "k").write.mode("overwrite").parquet(d)
         row = layout.verify_shard_layout(spark, d, "k").collect()[0]
         assert row["overlap_pairs"] > 0
 
-    def test_unsorted_shard_is_flagged(self, spark):
+    def test_unsorted_shard_is_flagged(self, spark, tmp_path):
         df = spark.range(0, 100).select(
             (F.lit(99) - F.col("id")).alias("k")
         ).coalesce(1)
-        d = tempfile.mkdtemp(prefix="nna_t_unsorted_")
+        d = str(tmp_path)
         df.write.mode("overwrite").parquet(d)
         row = layout.verify_shard_layout(spark, d, "k").collect()[0]
         assert bool(row["all_sorted"]) is False
 
 
 class TestCompaction:
-    def test_counts_and_content(self, spark):
-        base = tempfile.mkdtemp(prefix="nna_t_compact_")
+    def test_counts_and_content(self, spark, tmp_path):
+        base = str(tmp_path)
         small, out = f"{base}/in", f"{base}/out"
         spark.range(0, 500).repartition(8).write.parquet(small)
         before, after = layout.compact_small_files(spark, small, out, 2)
@@ -222,8 +221,8 @@ class TestSampleKPerGroup:
 
 
 class TestZoneMap:
-    def test_prune_skips_files_and_preserves_answer(self, spark):
-        d = tempfile.mkdtemp(prefix="nna_t_zmap_")
+    def test_prune_skips_files_and_preserves_answer(self, spark, tmp_path):
+        d = str(tmp_path)
         df = spark.range(0, 10_000).select(F.col("id").alias("k"))
         layout.range_shard_write(df, d, "k", num_shards=8)
         zmap = layout.zone_map(spark, d, "k")
@@ -239,8 +238,8 @@ class TestZoneMap:
 
 
 class TestSchemaEvolution:
-    def test_legacy_files_surface_nulls(self, spark):
-        base = tempfile.mkdtemp(prefix="nna_t_evolve_")
+    def test_legacy_files_surface_nulls(self, spark, tmp_path):
+        base = str(tmp_path)
         spark.range(0, 10).select(F.col("id")).write.parquet(f"{base}/v1")
         spark.range(10, 20).select(
             F.col("id"), F.lit("new").alias("tag")
@@ -472,8 +471,8 @@ class TestReviewEdgeCases:
         # count(DISTINCT v): NULL never counts, all-NULL group shows 0
         assert got == {"a": 2, "b": 0}
 
-    def test_compaction_reaches_target_when_scan_undersplits(self, spark):
-        base = tempfile.mkdtemp(prefix="nna_t_compact2_")
+    def test_compaction_reaches_target_when_scan_undersplits(self, spark, tmp_path):
+        base = str(tmp_path)
         small, out = f"{base}/in", f"{base}/out"
         spark.range(0, 100).coalesce(1).write.parquet(small)  # 1 tiny file
         before, after = layout.compact_small_files(spark, small, out, 4)

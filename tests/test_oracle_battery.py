@@ -14,19 +14,49 @@ else.
 
 from __future__ import annotations
 
+import os
 import sys
+import tempfile
 from pathlib import Path
 
 import duckdb
 import pytest
+from pyspark.sql.conf import RuntimeConfig
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry
+from conftest import SCRATCH_PREFIXES
+from nnanalytics_spark.core import scratch
 from tools.check_oracle import attach_views, compare_one
 
 QUERIES = entry.queries()
 ORACLES = entry.oracle_sql()
+
+# _events' TIMESTAMP(NANOS) read guard is the one conf write a builder
+# may make on the session it is handed (a no-op for timestamp[us] data).
+ALLOWED_CONF_WRITES = {"spark.sql.legacy.parquet.nanosAsLong"}
+
+
+def _tmp_scratch_entries() -> set[str]:
+    return {e for e in os.listdir(tempfile.gettempdir()) if e.startswith(SCRATCH_PREFIXES)}
+
+
+@pytest.fixture
+def handed_conf_writes(spark, monkeypatch):
+    """Keys a query builder sets on the session it was handed: the
+    threaded web server shares that session, so a builder that sets (or
+    swaps and restores) its conf races every other request."""
+    writes: list[str] = []
+    handed, real_set = spark.conf._jconf, RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        if self._jconf.equals(handed):
+            writes.append(key)
+        real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    return writes
 
 
 @pytest.fixture(scope="module")
@@ -39,12 +69,18 @@ def duck():
 
 @pytest.mark.slow
 @pytest.mark.parametrize("name", list(QUERIES), ids=list(QUERIES))
-def test_oracle_battery(name, spark, duck):
+def test_oracle_battery(name, spark, duck, handed_conf_writes):
+    tmp_before = _tmp_scratch_entries()
     status, detail = compare_one(spark, duck, name, QUERIES[name], ORACLES.get(name))
     assert status != "fail", f"{name}: {detail}"
     if ORACLES.get(name) is None:
         # rows-only by design — still guard against silent emptiness
         assert not detail.startswith("0 rows"), f"{name}: went empty"
+    assert set(handed_conf_writes) <= ALLOWED_CONF_WRITES, (
+        f"{name} set {sorted(set(handed_conf_writes))} on the handed session"
+    )
+    leaked = _tmp_scratch_entries() - tmp_before - {os.path.basename(scratch.root())}
+    assert not leaked, f"{name} left temp state outside the scratch root: {sorted(leaked)}"
 
 
 @pytest.mark.slow
